@@ -3,8 +3,12 @@ package graft
 import graft.io.{FileCatalog, Mover, Readers, Writers}
 import graft.model.SchemaJson
 import graft.ops.{Cleaner, CsvRepair, PatientDatamart}
-import graft.pipeline.{Clock, Pipeline, Stage, SystemClock}
+import graft.pipeline.{Clock, Par, Pipeline, Stage, SystemClock}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import java.util.concurrent.ConcurrentLinkedQueue
 
 /** The complete reference pipeline as one runnable app — a user of
   * syntheaetlproject/Synthea-ETL points this at their Synthea CSV export and
@@ -30,6 +34,43 @@ object SyntheaEtl {
   private val MartSources = Set("patients", "payers", "allergies", "medications",
     "observations", "encounters", "conditions", "payer_transitions")
 
+  private val MartTables = PatientDatamart.dims.map(_.spec.name) :+ "fact_patient"
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
+
+  /** Undo a publish cut short between its two renames (live moved aside,
+    * staged copy not yet in place) and drop a staged copy left by a failed
+    * run. */
+  private def recover(fs: FileSystem, mart: Path, t: String): Unit = {
+    val live = new Path(mart, t)
+    val old = new Path(mart, s".old_$t")
+    if (fs.exists(old) && !fs.exists(live)) rename(fs, old, live)
+    fs.delete(new Path(mart, s".tmp_$t"), true)
+  }
+
+  /** Swap the staged `.tmp_<t>` in for the live mart table by directory
+    * rename, then point the catalog entry `t` at it (re-pointing an entry
+    * registered for another root, as `saveAsTable` Overwrite would). The
+    * schema is passed explicitly, so registration runs no inference job.
+    *
+    * On local and HDFS roots a rename moves no data, so each table's bytes
+    * are written once per run. On object stores (S3A) a directory rename is
+    * a server-side copy: the swap is neither atomic nor free there. */
+  private def publish(spark: SparkSession, fs: FileSystem, mart: Path, t: String,
+                      schema: StructType): Unit = {
+    val live = new Path(mart, t)
+    val old = new Path(mart, s".old_$t")
+    fs.delete(old, true)
+    if (fs.exists(live)) rename(fs, live, old)
+    rename(fs, new Path(mart, s".tmp_$t"), live)
+    fs.delete(old, true)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    // nullable, as parquet reads every column back
+    spark.catalog.createTable(t, "parquet",
+      StructType(schema.map(_.copy(nullable = true))), Map("path" -> live.toString))
+  }
+
   /** Declared schema resolution, most-specific first: a user-provided
     * `<root>/schemas/<table>.json` override (the reference's S3 schema
     * folder, Raw_To_Staging.py:72-76), then the packaged 18-table Synthea
@@ -37,11 +78,11 @@ object SyntheaEtl {
     * Documentation/Tables_Description.xlsx), then empty = all-string, the
     * reference's missing-schema behavior. A standard Synthea export never
     * reaches the fallback: all 18 tables ship as resources. */
-  def schemaFor(root: String, table: String): org.apache.spark.sql.types.StructType = {
+  def schemaFor(root: String, table: String): StructType = {
     val p = java.nio.file.Paths.get(s"$root/schemas/$table.json")
     if (java.nio.file.Files.exists(p)) SchemaJson.load(p.toString)
     else SchemaJson.loadResource(table)
-      .getOrElse(new org.apache.spark.sql.types.StructType()) // all-string fallback
+      .getOrElse(new StructType()) // all-string fallback
   }
 
   /** Build the stage list for one run date. `requireAll`: enforce the
@@ -59,7 +100,7 @@ object SyntheaEtl {
       // fixed costs the reference's sequential Glue loop pays 18× over
       // (outputs byte-identical; see graft.pipeline.Par)
       Stage("repair", s => {
-        graft.pipeline.Par.foreach(tables, 8) { t =>
+        Par.foreach(tables, 8) { t =>
           val files = catalog.listFiles(s"$root/source/$date/$t", ".csv")
           files.headOption.foreach { f =>
             CsvRepair.repair(s, Readers.text(s, f)).foreach { df =>
@@ -70,7 +111,7 @@ object SyntheaEtl {
       }, precondition = _ =>
         !requireAll || new Mover().isComplete(root, date, ExpectedTables)),
       Stage("clean", s => {
-        graft.pipeline.Par.foreach(tables, 8) { t =>
+        Par.foreach(tables, 8) { t =>
           val raw = Readers.csv(s, s"$root/raw/$date/$t")
           val cleaned = Cleaner.clean(raw, schemaFor(root, t))
           Writers.parquetTable(
@@ -79,47 +120,38 @@ object SyntheaEtl {
         }
       }),
       Stage("mart", s => {
-        def staging(t: String): DataFrame = Readers.parquet(s, s"$root/staging/$date/$t")
-        val loadedDims = scala.collection.mutable.ListBuffer.empty[DataFrame]
-        def existing(dim: String): Option[DataFrame] = {
-          // Hadoop FS check (not java.io.File) so the probe also works on
-          // HDFS/S3A roots
-          val p = new org.apache.hadoop.fs.Path(s"$root/mart/$dim")
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) {
-            val df = Readers.parquet(s, p.toString)
-            loadedDims += df
-            Some(df)
-          } else None
+        val mart = new Path(s"$root/mart")
+        val fs = mart.getFileSystem(s.sparkContext.hadoopConfiguration)
+        MartTables.foreach(recover(fs, mart, _))
+        // each source read once (a schema job each), all concurrently, and
+        // shared by the dims and the fact
+        val staging = Par.map(MartSources.toSeq, 8)(t =>
+          t -> Readers.parquet(s, s"$root/staging/$date/$t")).toMap
+        val loadedDims = new ConcurrentLinkedQueue[DataFrame]()
+        // Hadoop FS check (not java.io.File) so the probe also works on
+        // HDFS/S3A roots
+        def existing(dim: String): Option[DataFrame] =
+          Option.when(fs.exists(new Path(mart, dim))) {
+            val df = Readers.parquet(s, s"$mart/$dim")
+            loadedDims.add(df)
+            df
+          }
+        try {
+          // every table, first load or daily merge, is written once, to
+          // `.tmp_<t>`, concurrently. The merges (and the fact, which
+          // re-derives dim_location's) read the LIVE dims, so nothing is
+          // published until every staged write has finished.
+          val built = PatientDatamart.build(staging, existing, clock).toSeq
+          Par.foreach(built, 8) { case (t, df) =>
+            Writers.parquet(df, new Path(mart, s".tmp_$t").toString)
+          }
+          built.foreach { case (t, df) => publish(s, fs, mart, t, df.schema) }
+        } finally {
+          // the SCD2 merge caches each existing dim for its self-joins
+          // (Scd2.faithful/idiomatic); published or failed, the run is done
+          // with them — release them so long-lived sessions don't accumulate
+          loadedDims.forEach(_.unpersist())
         }
-        // the SCD2 merges are independent per dim (disjoint targets; the
-        // fact's plan references the dim FRAMES, not their written files)
-        // — write them concurrently, two-phase each
-        graft.pipeline.Par.foreach(
-          PatientDatamart.build(staging, existing, clock).toSeq, 8) {
-          case (name, df) =>
-            val live = new org.apache.hadoop.fs.Path(s"$root/mart/$name")
-            val fs = live.getFileSystem(s.sparkContext.hadoopConfiguration)
-            if (!fs.exists(live))
-              // FIRST load: the target does not exist, so no plan can be
-              // reading it — write the dim directly. The two-phase dance
-              // below otherwise costs a full extra write + read-back +
-              // delete per table on every initial backfill.
-              Writers.parquetTable(df, live.toString, name)
-            else {
-              // two-phase write: the merge reads the existing dim, so
-              // materialize to a staging location before overwriting the
-              // live one
-              val tmp = s"$root/mart/.tmp_$name"
-              Writers.parquet(df, tmp)
-              Writers.parquetTable(Readers.parquet(s, tmp), live.toString, name)
-              fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-            }
-        }
-        // the SCD2 merge caches each existing dim for its self-joins
-        // (Scd2.faithful/idiomatic); those entries are dead once the dim is
-        // rewritten — release them so long-lived sessions don't accumulate
-        loadedDims.foreach(_.unpersist())
       }, precondition = _ => MartSources.subsetOf(tables.toSet))
     )
   }

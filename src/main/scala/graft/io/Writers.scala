@@ -23,10 +23,6 @@ object Writers {
       .option("header", "true")
       .csv(path)
 
-  /** K1 scale — parallel CSV write (one file per partition). */
-  def csv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
   /** K2 — parquet overwrite + session-catalog registration, the staging/mart
     * sink (reference: Raw_To_Staging.py:174-180, Patient_datamart.py:115).
     * Catalog = Spark session catalog (the Glue Catalog equivalent). */

@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.pipeline.{Clock, SystemClock}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.pipeline.{Clock, Par, SystemClock}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's patient star schema, re-expressed through graft ops
@@ -69,14 +69,16 @@ object PatientDatamart {
 
   /** Build all six dims. `staging(table)` loads a cleaned staging table;
     * `existing(dimName)` loads the current dim if any. Returns dimName →
-    * merged dim. */
+    * merged dim. The dims are planned on a pool: each plan's reads and the
+    * merge's emptiness probe are small driver-bound jobs, overlapped across
+    * dims, so both loaders must be thread-safe. */
   def buildDims(
       staging: String => DataFrame,
       existing: String => Option[DataFrame],
       clock: Clock = SystemClock,
       faithful: Boolean = true
   ): Map[String, DataFrame] =
-    dims.map { d =>
+    Par.map(dims) { d =>
       val src = staging(d.source)
       val prepared =
         if (d.spec.name == "dim_observation")

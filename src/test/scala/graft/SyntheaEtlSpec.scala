@@ -1,8 +1,11 @@
 package graft
 
 import graft.io.Readers
-import graft.pipeline.FixedClock
+import graft.ops.PatientDatamart
+import graft.pipeline.{Clock, FixedClock}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
@@ -54,6 +57,24 @@ class SyntheaEtlSpec extends AnyFunSuite {
         |""".stripMargin)
   }
 
+  /** A fresh root loaded with day 1 (`ownership` for pay1). */
+  private def dayOne(ownership: String = "PRIVATE"): String = {
+    val root = Files.createTempDirectory("graft-synthea").toString
+    writeFixtures(s"$root/datasource", ownership)
+    SyntheaEtl.run(spark, s"$root/datasource", root, "2024-01-01",
+      FixedClock("2024-01-01 00:00:00"))
+    root
+  }
+
+  /** Day 2 on `root`: pay1's ownership flips to GOVERNMENT. */
+  private def dayTwo(root: String, clock: Clock = FixedClock("2024-06-01 00:00:00")): Seq[String] = {
+    writeFixtures(s"$root/datasource", "GOVERNMENT")
+    SyntheaEtl.run(spark, s"$root/datasource", root, "2024-06-01", clock)
+  }
+
+  private def ownershipByActive(df: DataFrame): Map[Boolean, String] =
+    df.collect().map(r => r.getAs[Boolean]("is_active") -> r.getAs[String]("ownership")).toMap
+
   test("four stages end-to-end + incremental SCD2 second run") {
     val root = Files.createTempDirectory("graft-synthea").toString
     val landing = s"$root/datasource"
@@ -98,6 +119,52 @@ class SyntheaEtlSpec extends AnyFunSuite {
     // unchanged dims pass through (idempotent second run)
     val dimMed = Readers.parquet(spark, s"$root/mart/dim_medication").collect()
     assert(dimMed.length == 1 && dimMed.head.getAs[Boolean]("is_active"))
+
+    // only the live tables remain, and the catalog serves this root's rows
+    val leftovers = new java.io.File(s"$root/mart").list().filter(_.startsWith("."))
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
+    assert(ownershipByActive(spark.table("dim_payer")) ==
+      Map(false -> "PRIVATE", true -> "GOVERNMENT"))
+    assert(spark.table("fact_patient").count() == 2)
+
+    // a run on another root re-points the same catalog entries
+    val other = dayOne("SELF")
+    assert(ownershipByActive(spark.table("dim_payer")) == Map(true -> "SELF"))
+    Seq("dim_payer", "fact_patient").foreach { t =>
+      val files = spark.table(t).inputFiles
+      assert(files.nonEmpty && files.forall(_.contains(other)), s"$t: ${files.mkString(", ")}")
+    }
+  }
+
+  test("publish recovery: a crash between the two renames loses no dim history") {
+    val root = dayOne()
+    // crash after `live -> .old_`, before `.tmp_ -> live`, with a staged
+    // copy of another table left behind
+    Files.move(Paths.get(s"$root/mart/dim_payer"), Paths.get(s"$root/mart/.old_dim_payer"))
+    Files.createDirectories(Paths.get(s"$root/mart/.tmp_dim_patient"))
+    Files.writeString(Paths.get(s"$root/mart/.tmp_dim_patient/part-stale.parquet"), "junk")
+    assert(dayTwo(root) == Seq("ingest", "repair", "clean", "mart"))
+    val dimPayer = Readers.parquet(spark, s"$root/mart/dim_payer")
+    assert(dimPayer.count() == 2)
+    assert(ownershipByActive(dimPayer) == Map(false -> "PRIVATE", true -> "GOVERNMENT"))
+    assert(Readers.parquet(spark, s"$root/mart/dim_patient").count() == 2)
+    assert(new java.io.File(s"$root/mart").list().forall(!_.startsWith(".")))
+  }
+
+  test("a failed mart write releases the cached dims and publishes nothing") {
+    val root = dayOne()
+    // the stamp of every changed row throws at write time: dim_payer's
+    // merge (and the fact) fail, the unchanged dims write fine
+    val broken = new Clock {
+      def now: Column = raise_error(lit("clock unavailable")).cast("timestamp")
+    }
+    intercept[Exception](dayTwo(root, broken))
+    val mart = (PatientDatamart.dims.map(_.spec.name) :+ "fact_patient")
+      .map(t => t -> Readers.parquet(spark, s"$root/mart/$t")).toMap
+    mart.foreach { case (t, df) =>
+      assert(df.storageLevel == StorageLevel.NONE, s"$t is still cached")
+    }
+    assert(ownershipByActive(mart("dim_payer")) == Map(true -> "PRIVATE"))
   }
 
   test("18-table completeness barrier blocks the pipeline when enforced") {
